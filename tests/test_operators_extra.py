@@ -207,9 +207,10 @@ def test_multimodal_codec_mode_through_spark(spark):
     assert img["n_bytes"] == w * h * 3
 
 
-def test_substring_containment(spark):
-    from webcrawler_spark.operators.suffix import substring_containment
-
+def test_substring_containment(spark, substring_verdicts):
+    """The engine's one length gate + verify core: a true substring
+    verifies with its container, a non-substring does not, and a pair with
+    an empty side is gated out before any text moves."""
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon zeta"),
@@ -219,64 +220,30 @@ def test_substring_containment(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "a long, b long"
-    )
     got = {
         (r["a"], r["b"]): (r["is_substring"], r["container"])
-        for r in substring_containment(pairs, docs).collect()
+        for r in substring_verdicts([(1, 2), (1, 3), (1, 4)], docs)
     }
     assert got[(1, 2)] == (True, 1)
     assert got[(1, 3)][0] is False
     assert (1, 4) not in got  # empty side gated out before any text moves
 
 
-def test_partition_containment_pairs():
-    from webcrawler_spark.operators.hashing import token_hashes
-    from webcrawler_spark.operators.suffix import partition_containment_pairs
-
-    cache = {}
-    big = token_hashes([f"w{i}" for i in range(100)], cache)
-    inner = big[20:60].copy()
-    other = token_hashes([f"x{i}" for i in range(50)], cache)
-    pairs = partition_containment_pairs([10, 11, 12], [big, inner, other])
-    assert pairs == [(11, 10)]
-
-
-def test_partition_containment_pairs_large_partition():
-    """The owner lookup is searchsorted (O(log n) per hit) — on a partition
-    large enough that a linear scan per match would be visibly quadratic,
-    every planted containment must still resolve to the right owner."""
-    from webcrawler_spark.operators.hashing import token_hashes
-    from webcrawler_spark.operators.suffix import partition_containment_pairs
-
-    cache = {}
-    ids, seqs, want = [], [], set()
-    for d in range(300):
-        base = token_hashes([f"d{d}w{i}" for i in range(80)], cache)
-        ids.append(d)
-        seqs.append(base)
-        if d % 3 == 0:  # plant a contained doc for every third base
-            ids.append(1000 + d)
-            seqs.append(base[10:50].copy())
-            want.add((1000 + d, d))
-    got = partition_containment_pairs(ids, seqs)
-    assert set(got) == want
-
-
 def test_substring_edges_on_corpus(spark):
-    """containment family docs are exact substrings — the anchor+substring
-    path must find them."""
-    from webcrawler_spark.operators.lsh import anchor_candidates
+    """containment family docs are exact substrings — build_edges'
+    anchor + substring path must find them."""
+    from webcrawler_spark.operators.lsh import build_edges
     from webcrawler_spark.operators.signatures import compute_signatures
-    from webcrawler_spark.operators.suffix import substring_edges
     from webcrawler_spark.sources.corpus import english_docs, generate_corpus
 
     corpus = generate_corpus(200, seed=42)
     docs = spark.createDataFrame(english_docs(corpus), "doc_id long, text string")
     sigs = compute_signatures(docs).cache()
     edges = {
-        (r["a"], r["b"]) for r in substring_edges(sigs, docs).collect()
+        (r["a"], r["b"])
+        for r in build_edges(sigs, docs=docs)
+        .filter(F.col("kind") == "substring")
+        .collect()
     }
     containment_truth = {
         (a, b) for a, b, fam in corpus.truth_pairs if fam == "containment"

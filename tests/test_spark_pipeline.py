@@ -6,12 +6,7 @@ from pyspark.sql import functions as F
 
 from webcrawler_spark.config import DedupConfig
 from webcrawler_spark.operators.components import assign_clusters, connected_components
-from webcrawler_spark.operators.lsh import (
-    anchor_candidates,
-    build_edges,
-    lsh_candidates,
-    simhash_candidates,
-)
+from webcrawler_spark.operators.lsh import build_edges
 from webcrawler_spark.operators.oracle import run_oracle
 from webcrawler_spark.operators.signatures import compute_signatures
 from webcrawler_spark.sources.corpus import english_docs, generate_corpus, write_parquet
@@ -68,10 +63,22 @@ def test_signatures_match_oracle(sigs, oracle_result):
         assert set(got_sh.tolist()) == set(want_sh.tolist())
 
 
-def test_candidates_match_oracle(sigs, oracle_result):
-    assert _pairs(lsh_candidates(sigs, CFG)) == oracle_result.lsh_candidates
-    assert _pairs(anchor_candidates(sigs, CFG)) == oracle_result.anchor_candidates
-    assert _pairs(simhash_candidates(sigs, CFG)) == oracle_result.simhash_candidates
+def test_candidates_match_oracle(sigs, docs_df, oracle_result):
+    """The candidate sets build_edges actually verifies — its persisted
+    candidate table per generator and its tier-1 survivors — equal the
+    oracle's per-generator sets."""
+    held = []
+    build_edges(sigs, CFG, docs=docs_df, persisted_out=held)
+    _, cand, tier1 = held
+    lsh = cand.filter(F.col("gen") == "lsh")
+    assert _pairs(lsh) == oracle_result.lsh_candidates
+    assert _pairs(tier1) == oracle_result.anchor_candidates
+    sim_held = []
+    build_edges(sigs, DedupConfig(simhash_edges=True), persisted_out=sim_held)
+    sim = sim_held[1].filter(F.col("gen") == "sim")
+    assert _pairs(sim) == oracle_result.simhash_candidates
+    for df in held + sim_held:
+        df.unpersist()
 
 
 def test_edges_match_oracle(sigs, docs_df, oracle_result):
@@ -303,11 +310,9 @@ def test_tune_split_size_guard(spark):
         )
 
 
-def test_substring_equal_length_gated(spark):
+def test_substring_equal_length_gated(spark, substring_verdicts):
     """Identical texts are exact-kind edges, never substring edges; proper
     substrings still verify; the pair verdicts are unchanged otherwise."""
-    from webcrawler_spark.operators.suffix import substring_containment
-
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon zeta"),
@@ -317,12 +322,9 @@ def test_substring_equal_length_gated(spark):
         ],
         "doc_id long, text string",
     )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "a long, b long"
-    )
     got = {
         (r["a"], r["b"]): r["is_substring"]
-        for r in substring_containment(pairs, docs).collect()
+        for r in substring_verdicts([(1, 2), (1, 3), (1, 4)], docs)
     }
     assert (1, 2) not in got          # equal-length pair gated out entirely
     assert got[(1, 3)] is True

@@ -58,18 +58,3 @@ def test_parse_ok_percent_escapes():
     assert urlutil.parse_ok("https://e.com/a%20b")
     assert not urlutil.parse_ok("https://e.com/a%2")  # truncated escape
     assert not urlutil.parse_ok("https://e.com/a%zz")  # non-hex
-
-
-def test_langid_trigram():
-    from webcrawler_spark.functions.langid import detect_language, langid_scores
-
-    assert detect_language("the cat sat on the mat and it was good there") == "en"
-    assert detect_language("el gato estaba sobre la mesa y era bueno alli") == "es"
-    assert detect_language("der hund war unter dem tisch und es war gut") == "de"
-    assert detect_language("le chat etait sur la table et il etait bon") == "fr"
-    assert detect_language("") == "und"
-    assert detect_language("zzzz qqqq xxxx") == "und"
-    s = langid_scores("the cat sat on the mat")
-    assert set(s) == {"en", "es", "de", "fr"}
-    # deterministic
-    assert s == langid_scores("the cat sat on the mat")

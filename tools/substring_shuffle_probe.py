@@ -19,8 +19,9 @@ reference's scanner cap, textnorm.py), so a doc in k verify pairs ships at
 most 64 KiB * k — and k is the TRUE-POSITIVE pair count for that doc (the
 tier-1 estimate == 1 filter), not the candidate count.
 
-Writes BENCH/substring_shuffle.json and prints a summary.
+Writes BENCH/substring_shuffle.json (or --out) and prints a summary.
 Usage: python tools/substring_shuffle_probe.py [--fillers 20000] [--k 300]
+       [--out PATH]
 """
 
 from __future__ import annotations
@@ -80,12 +81,15 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--fillers", type=int, default=20000)
     ap.add_argument("--k", type=int, default=300)
+    ap.add_argument(
+        "--out", default=os.path.join(REPO, "BENCH", "substring_shuffle.json")
+    )
     args = ap.parse_args()
 
     from webcrawler_spark.config import DEFAULT_CONFIG
-    from webcrawler_spark.operators.lsh import anchor_candidates
+    from webcrawler_spark.operators.lsh import _length_gate, build_edges
     from webcrawler_spark.operators.signatures import compute_signatures
-    from webcrawler_spark.operators.suffix import substring_containment
+    from webcrawler_spark.operators.suffix import verify_substring_pairs
     from webcrawler_spark.session import get_spark
 
     spark = get_spark("substring-shuffle-probe", master="local[8]",
@@ -100,14 +104,18 @@ def main() -> None:
     sigs = compute_signatures(docs, DEFAULT_CONFIG).persist()
     sigs.count()  # signature stage excluded from the measurements
 
+    # candidates = build_edges' persisted tier-1 survivors (a, b, len_a,
+    # len_b): buckets -> pairs -> tier-1, the sub-DAG the engine runs
     before = _stages(spark)
-    cand = anchor_candidates(sigs, DEFAULT_CONFIG).select("a", "b").persist()
+    held: list = []
+    build_edges(sigs, DEFAULT_CONFIG, docs=docs, persisted_out=held)
+    cand = held[2]
     n_cand = cand.count()
     cand_delta = _shuffle_delta(spark, before)
 
     # the watched sub-DAG: length gate + per-pair text joins + Arrow verify
     before = _stages(spark)
-    verdicts = substring_containment(cand, docs, meta=sigs).persist()
+    verdicts = verify_substring_pairs(_length_gate(cand), docs).persist()
     edges = verdicts.filter("is_substring")
     n_edges = edges.count()
     verify_delta = _shuffle_delta(spark, before)
@@ -140,8 +148,8 @@ def main() -> None:
             "true-positive pair count"
         ),
     }
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    with open(os.path.join(REPO, "BENCH", "substring_shuffle.json"), "w") as fh:
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    with open(args.out, "w") as fh:
         json.dump(out, fh, indent=1)
     print(json.dumps(out, indent=1))
     spark.stop()

@@ -6,8 +6,8 @@ crawler (daniel-maxwell/WebCrawler), re-expressed Spark-first:
 - ``extract``   : byte-identical visible-text extraction (reference
                   extractor.go semantics) as Arrow ``mapInPandas`` stages.
 - ``operators`` : content-level dedup (exact / MinHash-LSH / SimHash /
-                  suffix-array containment), distributed union-find,
-                  similarity search, text analysis.
+                  anchor containment + exact-substring verify), distributed
+                  union-find, similarity search, text analysis.
 - ``sources``   : web_pages table adapters (Iceberg when available,
                   parquet fallback) + deterministic synthetic corpus.
 - ``plans``     : end-to-end pipeline (stage graph, checkpoints, metrics).

@@ -17,9 +17,12 @@ existing run from its persisted stage outputs:
   fetched by key (at cluster scale: a bucketed/partitioned stage table —
   the join shuffles only the new side), re-capped TOGETHER with the new
   rows so the cap/drop policies see combined bucket sizes, and pairs with
-  at least one new side are verified exactly like the batch path
+  at least one new side are verified by the SAME tail as the batch path
   (new-vs-old and new-vs-new; old-vs-old pairs were already resolved and
-  are filtered out before any verify work).
+  are filtered out before any verify work). ``incremental_edges`` derives
+  only its own candidates, kept-anchor counts and exact edges, then hands
+  them to ``lsh._verified_edges`` — the tier-1 → Jaccard/containment →
+  simhash → length-gate → substring tail ``build_edges`` runs.
 - assignments extend via union-find SEEDED with the existing cluster ids:
   old components enter as (cluster_id, member) star edges, so a new doc
   bridging two old clusters merges them exactly as a full recompute would,
@@ -51,12 +54,11 @@ from pyspark.sql import functions as F
 from webcrawler_spark.config import DedupConfig, DEFAULT_CONFIG
 from webcrawler_spark.operators.components import assign_clusters
 from webcrawler_spark.operators.lsh import (
-    _anchor_tier1,
     _pairs_from_unified,
+    _verified_edges,
     bucket_rows,
     build_edges,
     unified_capped_buckets,
-    verify_candidates,
 )
 
 
@@ -209,6 +211,40 @@ def _touched_recap(
     return new_buckets, touched, old_touched, combined, capped
 
 
+def _kept_counts_delta(
+    state: DedupState,
+    old_touched: DataFrame,
+    capped: DataFrame,
+    new_ids: DataFrame,
+) -> DataFrame:
+    """Per-doc kept-anchor counts (doc_id, n_kept) over old + new docs as an
+    O(touched) delta on ``state.kept_anchor_counts``: an old doc's count
+    changes only by the touched-key rows it LOSES to the re-decision (keys
+    pushed over the drop cap by new members); a new doc's count is exactly
+    its surviving capped rows."""
+    capped_anchor = capped.filter(F.col("gen") == "anchor")
+    lost = (
+        old_touched.filter(F.col("gen") == "anchor")
+        .join(capped_anchor, ["gen", "key", "doc_id"], "left_anti")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_lost"))
+    )
+    old_counts = (
+        state.kept_anchor_counts.join(lost, "doc_id", "left")
+        .select(
+            "doc_id",
+            (F.col("n_kept") - F.coalesce("n_lost", F.lit(0))).alias("n_kept"),
+        )
+        .filter(F.col("n_kept") > 0)
+    )
+    new_counts = (
+        capped_anchor.join(new_ids, "doc_id", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.count("*").alias("n_kept"))
+    )
+    return old_counts.unionByName(new_counts)
+
+
 def incremental_edges(
     state: DedupState,
     new_sigs: DataFrame,
@@ -218,9 +254,9 @@ def incremental_edges(
     persisted_out: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Edges with >= 1 new-batch side: exact / near / containment /
-    (cfg-gated) simhash / substring kinds, same thresholds and verify as
-    the batch path. ``docs`` (doc_id, text over old + new) enables the
-    substring pass, exactly as in ``build_edges``.
+    (cfg-gated) simhash / substring kinds through the batch path's own
+    verify tail (``lsh._verified_edges``). ``docs`` (doc_id, text over
+    old + new) enables the substring pass, exactly as in ``build_edges``.
 
     Scale shape: ``touched`` keys are bounded by |batch| x keys-per-doc;
     every window/groupBy below runs over touched keys only. The one
@@ -258,34 +294,8 @@ def incremental_edges(
     # tier-1 kept-anchor denominators, combined-drop semantics: rows in
     # untouched keys keep their recorded survival (their buckets gained no
     # members), rows in touched keys take the re-decided verdict above.
-    capped_anchor = capped.filter(F.col("gen") == "anchor")
     if state.kept_anchor_counts is not None:
-        # O(touched) delta over the PRECOMPUTED per-doc aggregate: an old
-        # doc's count changes only by the touched-key rows it LOSES to the
-        # re-decision (keys pushed over the drop cap by new members); a new
-        # doc's count is exactly its surviving capped rows
-        old_touched_anchor = old_touched.filter(F.col("gen") == "anchor")
-        lost = (
-            old_touched_anchor.join(
-                capped_anchor, ["gen", "key", "doc_id"], "left_anti"
-            )
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_lost"))
-        )
-        old_counts = (
-            state.kept_anchor_counts.join(lost, "doc_id", "left")
-            .select(
-                "doc_id",
-                (F.col("n_kept") - F.coalesce("n_lost", F.lit(0))).alias("n_kept"),
-            )
-            .filter(F.col("n_kept") > 0)
-        )
-        new_counts = (
-            capped_anchor.join(new_ids, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_kept"))
-        )
-        kept_counts = old_counts.unionByName(new_counts)
+        kept_counts = _kept_counts_delta(state, old_touched, capped, new_ids)
     else:
         # legacy path (no precomputed aggregate): one O(corpus) pass over
         # the state bucket table
@@ -293,14 +303,14 @@ def incremental_edges(
             touched, ["gen", "key"], "left_anti"
         )
         kept_rows = untouched_anchor.select("doc_id").unionByName(
-            capped_anchor.select("doc_id")
+            capped.filter(F.col("gen") == "anchor").select("doc_id")
         )
         kept_counts = kept_rows.groupBy("doc_id").agg(
             F.count("*").alias("n_kept")
         )
     # bound the counts table to docs that actually appear in anchor pairs —
-    # tier-1 (and the n_chars fetch below) then touch O(candidate docs),
-    # not every doc in the corpus
+    # tier-1 (and its n_chars fetch) then touch O(candidate docs), not
+    # every doc in the corpus
     anchor_pairs = cand.filter(F.col("gen") == "anchor")
     cand_ids = (
         anchor_pairs.select(F.col("a").alias("doc_id"))
@@ -308,42 +318,6 @@ def incremental_edges(
         .distinct()
     )
     kept_counts = kept_counts.join(cand_ids, "doc_id", "left_semi")
-    if docs is not None and cfg.substring_pass:
-        kept_counts = kept_counts.join(
-            all_sigs.select("doc_id", "n_chars"), "doc_id"
-        )
-
-    anchor_kept = _anchor_tier1(
-        cand.filter(F.col("gen") == "anchor").select("a", "b", "n_shared"),
-        kept_counts,
-        cfg,
-    )
-    if docs is not None and cfg.substring_pass:
-        # round 6: same two-consumer persist as build_edges (jaccard union
-        # + substring gate share the tier-1 survivors)
-        anchor_kept = anchor_kept.persist()
-        if persisted_out is not None:
-            persisted_out.append(anchor_kept)
-    jac_cand = (
-        cand.filter(F.col("gen") == "lsh")
-        .select("a", "b")
-        .unionByName(anchor_kept.select("a", "b"))
-        .distinct()
-    )
-    verified = verify_candidates(jac_cand, all_sigs, cfg)
-    margin = cfg.signature_tau_margin if cfg.verify_mode == "signature" else 0.0
-    kinds = F.array(
-        F.when(F.col("jaccard") >= cfg.jaccard_tau - margin, F.lit("near")),
-        F.when(
-            F.col("containment") >= cfg.containment_tau - margin,
-            F.lit("containment"),
-        ),
-    )
-    out = verified.select(
-        "a",
-        "b",
-        F.explode(F.filter(kinds, lambda x: x.isNotNull())).alias("kind"),
-    )
 
     # exact (sha256) edges: new docs against the whole corpus (old + new) —
     # a scalar hash join, never raw text
@@ -359,28 +333,9 @@ def incremental_edges(
         )
         .distinct()
     )
-    out = exact.unionByName(out)
-
-    if cfg.simhash_edges:
-        from webcrawler_spark.operators.lsh import simhash_edges
-
-        sim_cand = cand.filter(F.col("gen") == "sim").select("a", "b")
-        out = out.unionByName(simhash_edges(sim_cand, all_sigs, cfg))
-
-    if docs is not None and cfg.substring_pass:
-        from webcrawler_spark.operators.suffix import verify_substring_pairs
-
-        gated = anchor_kept.filter(
-            (F.col("len_a") != F.col("len_b"))
-            & (F.least("len_a", "len_b") > 0)
-        ).select("a", "b")
-        sub = verify_substring_pairs(gated, docs)
-        out = out.unionByName(
-            sub.filter(F.col("is_substring")).select(
-                "a", "b", F.lit("substring").alias("kind")
-            )
-        )
-    return out
+    return _verified_edges(
+        all_sigs, cand, kept_counts, exact, cfg, docs, persisted_out
+    )
 
 
 def incremental_assign(
@@ -479,30 +434,8 @@ def advance_state(
 
     kept_next = None
     if state.kept_anchor_counts is not None:
-        capped_anchor = capped.filter(F.col("gen") == "anchor")
-        lost = (
-            old_touched.filter(F.col("gen") == "anchor")
-            .join(capped_anchor, ["gen", "key", "doc_id"], "left_anti")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_lost"))
-        )
-        old_counts = (
-            state.kept_anchor_counts.join(lost, "doc_id", "left")
-            .select(
-                "doc_id",
-                (F.col("n_kept") - F.coalesce("n_lost", F.lit(0))).alias(
-                    "n_kept"
-                ),
-            )
-            .filter(F.col("n_kept") > 0)
-        )
         new_ids = new_sigs.select("doc_id").distinct()
-        new_counts = (
-            capped_anchor.join(new_ids, "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_kept"))
-        )
-        kept_next = old_counts.unionByName(new_counts)
+        kept_next = _kept_counts_delta(state, old_touched, capped, new_ids)
 
     return DedupState(
         sigs=state.sigs.unionByName(new_sigs),

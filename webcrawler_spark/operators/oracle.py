@@ -198,7 +198,7 @@ def run_oracle(
     # smaller-text-in-larger-text containment (mirrors build_edges' reuse of
     # the anchor candidate stream). Equal-length pairs are gated out before
     # any text is compared — a PROPER substring needs differing lengths, and
-    # identical texts are already exact edges (suffix.substring_containment).
+    # identical texts are already exact edges (lsh._length_gate).
     if cfg.substring_pass:
         texts = dict(docs)
         for a, b in sorted(res.anchor_candidates):

@@ -1,18 +1,18 @@
-"""Exact substring containment (SURVEY.md B8, the suffix-array pass).
+"""Exact substring verify (SURVEY.md B8, the substring pass).
 
 Shingle-set containment (lsh.py) catches token-level containment; this
 operator verifies EXACT substring relations (doc A is a contiguous substring
-of doc B) for candidate pairs, and provides a per-partition generalized
-suffix-array discovery utility for within-partition mining.
+of doc B) for candidate pairs.
 
-Scale design: candidates come from the anchor stage (shared rare shingles),
-verification co-locates only the LENGTH-GATED candidate pairs' texts (the
-gate runs on signature-stage n_chars metadata — scalar joins, no text
-re-scan — and prunes equal-length pairs: identical texts are exact edges,
-unequal texts of one length cannot contain each other), and the per-pair
-check is O(|B|) Two-Way search inside an Arrow batch. A global
-suffix array over 10^12 docs is infeasible; the per-partition variant after
-repartitioning on an anchor prefix is the bounded alternative.
+Scale design: the engine's B8 path is lsh._verified_edges — candidates are
+the anchor tier-1 survivors (shared rare shingles), the length gate
+(lsh._length_gate) runs on signature-stage n_chars metadata carried by the
+tier-1 join — no text re-scan — and prunes equal-length pairs (identical
+texts are exact edges, unequal texts of one length cannot contain each
+other), and only the gated pairs' texts are co-located for the per-pair
+O(|B|) Two-Way search inside an Arrow batch here. No global suffix array is
+built: over 10^12 docs it is infeasible, and the anchor stream already
+bounds the verify to O(true-positive pairs).
 
 Documented miss classes of the anchor-sampled candidate stream (what the
 sampling can structurally NOT see — stated here and mirrored in the SQL
@@ -38,7 +38,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -55,61 +54,14 @@ _PAIR_SCHEMA = T.StructType(
 )
 
 
-def substring_containment(
-    pairs: DataFrame, docs: DataFrame, meta: DataFrame | None = None
-) -> DataFrame:
-    """pairs(a, b) + docs(doc_id, text) -> exact substring verdicts.
+def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
+    """gated(a, b) + docs(doc_id, text) -> (a, b, is_substring, container).
 
     The smaller text is searched inside the larger (str in str — C-level
-    Two-Way algorithm). Scale shape:
-
-    - **Length gate first** (scalar join, no text moves): a pair can only be
-      a PROPER substring when the char lengths differ — equal lengths imply
-      either identical texts (already an exact edge from the sha256
-      pre-pass; re-verifying them here would be redundant work on corpora
-      with heavy exact duplication) or no containment at all. Pairs with an
-      empty side are dropped too (empty never contains/is-contained).
-      ``meta`` (doc_id, n_chars) supplies the lengths from signature-stage
-      metadata so no document text is re-scanned for the gate; without it
-      the lengths are computed from ``docs``.
-    - Text joins run only over the GATED pair set. Pair counts here are
-      bounded by the tier-1 containment estimate (≈ true-positive scale),
-      so text bytes crossing the join are O(surviving pairs), not
-      O(candidates) — a deliberate latency/scan trade over a needed-texts
-      semi-join, which was measured to cost more in stage latency than it
-      saves in bytes at every scale probed. Hub evidence
-      (tools/substring_shuffle_probe.py -> BENCH/substring_shuffle.json):
-      a 64 KiB container in ~300 pairs shuffles ~6 MB compressed across
-      the whole verify sub-DAG (~21 KB/pair), bounded structurally by the
-      64 KiB/doc textnorm cap x true-positive pairs; the inverse hub (one
-      doc contained in many) never reaches the text join — its anchor
-      buckets all exceed anchor_max_bucket (documented miss class below).
-
-    NOTE: identical-text pairs return no row (they are exact-kind edges,
-    not substring edges).
-    """
-    if meta is not None and "n_chars" in meta.columns:
-        lens = meta.select("doc_id", F.col("n_chars").alias("_len"))
-    else:
-        lens = docs.select("doc_id", F.length("text").alias("_len"))
-    la = lens.select(F.col("doc_id").alias("a"), F.col("_len").alias("len_a"))
-    lb = lens.select(F.col("doc_id").alias("b"), F.col("_len").alias("len_b"))
-    gated = (
-        pairs.join(la, "a")
-        .join(lb, "b")
-        .filter(
-            (F.col("len_a") != F.col("len_b"))
-            & (F.least("len_a", "len_b") > 0)
-        )
-        .select("a", "b")
-    )
-    return verify_substring_pairs(gated, docs)
-
-
-def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
-    """The text-verify core: caller guarantees the pairs are already
-    length-gated (differing, non-zero lengths). build_edges produces its
-    gated pairs for free off the tier-1 join and calls this directly."""
+    Two-Way algorithm). The caller guarantees the pairs already passed the
+    length gate (lsh._length_gate: differing, non-zero lengths), so
+    identical-text pairs never reach this point — they are exact-kind
+    edges, not substring edges."""
     ta = docs.select(F.col("doc_id").alias("a"), F.col("text").alias("text_a"))
     tb = docs.select(F.col("doc_id").alias("b"), F.col("text").alias("text_b"))
     # rebalance before the Python stage: the (tiny) pair set is broadcast
@@ -138,102 +90,3 @@ def verify_substring_pairs(gated: DataFrame, docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return joined.mapInPandas(gen, schema=_PAIR_SCHEMA)
-
-
-def substring_edges(
-    sigs: DataFrame, docs: DataFrame, cfg=None, persisted_out=None
-) -> DataFrame:
-    """Anchor candidates -> exact-substring edges (kind='substring').
-
-    Round 6: the length gate rides the tier-1 join (with_len=True — one
-    scalar join on the small per-doc kept set inside anchor_candidates)
-    instead of two pair-level joins against the signature meta afterwards;
-    the same piggyback build_edges uses. Same gated pair set."""
-    from webcrawler_spark.config import DEFAULT_CONFIG
-    from webcrawler_spark.operators.lsh import anchor_candidates
-
-    cfg = cfg or DEFAULT_CONFIG
-    cand = anchor_candidates(
-        sigs, cfg, persisted_out=persisted_out, with_len=True
-    )
-    gated = cand.filter(
-        (F.col("len_a") != F.col("len_b")) & (F.least("len_a", "len_b") > 0)
-    ).select("a", "b")
-    verdicts = verify_substring_pairs(gated, docs)
-    return verdicts.filter(F.col("is_substring")).select(
-        "a", "b", F.lit("substring").alias("kind")
-    )
-
-
-# ---------------------------------------------------------------------------
-# per-partition generalized suffix array (discovery within a partition)
-# ---------------------------------------------------------------------------
-
-def build_suffix_array(tok_h: np.ndarray, prefix: int = 8) -> np.ndarray:
-    """Suffix ordering of a uint64 token-hash sequence by fixed-width prefix
-    keys (numpy lexsort of the first `prefix` columns, padded). Sufficient
-    for k-prefix grouping; full comparisons happen only within prefix ties."""
-    n = len(tok_h)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    cols = []
-    for j in range(prefix):
-        col = np.full(n, 0, dtype=np.uint64)
-        col[: n - j] = tok_h[j:]
-        cols.append(col)
-    return np.lexsort(cols[::-1]).astype(np.int64)
-
-
-def partition_containment_pairs(
-    doc_ids: list[int],
-    token_seqs: list[np.ndarray],
-    min_len: int = 16,
-) -> list[tuple[int, int]]:
-    """Within one partition: find docs whose full token sequence occurs
-    verbatim inside another doc. Returns (contained_id, container_id) pairs.
-
-    Implementation: concatenate all token-hash sequences (uint64) with
-    unique separators into one byte string and use C-level substring search
-    per doc, accepting only 8-byte-aligned hits (token boundaries) outside
-    the doc's own span. Equivalent to generalized-suffix-array lookup with
-    O(total) memory and C-speed scans.
-    """
-    if not doc_ids:
-        return []
-    chunks: list[bytes] = []
-    spans: list[tuple[int, int]] = []  # byte span per doc
-    off = 0
-    for i, seq in enumerate(token_seqs):
-        b = np.ascontiguousarray(seq, dtype=np.uint64).tobytes()
-        chunks.append(b)
-        spans.append((off, off + len(b)))
-        off += len(b)
-        sep = np.array([0xFFFF_FFFF_0000_0000 + i], dtype=np.uint64).tobytes()
-        chunks.append(sep)
-        off += len(sep)
-    corpus = b"".join(chunks)
-    # owner lookup in O(log n): spans are laid out in ascending start order,
-    # so the doc containing byte `pos` is the last start <= pos
-    starts = np.fromiter((s for s, _ in spans), dtype=np.int64, count=len(spans))
-    ends = np.fromiter((e for _, e in spans), dtype=np.int64, count=len(spans))
-
-    out: list[tuple[int, int]] = []
-    for i, (did, seq) in enumerate(zip(doc_ids, token_seqs)):
-        if len(seq) < min_len:
-            continue
-        pat = np.ascontiguousarray(seq, dtype=np.uint64).tobytes()
-        start = 0
-        while True:
-            pos = corpus.find(pat, start)
-            if pos < 0:
-                break
-            start = pos + 8
-            if pos % 8 != 0:
-                continue
-            if spans[i][0] <= pos < spans[i][1]:
-                continue  # own occurrence
-            j = int(np.searchsorted(starts, pos, side="right")) - 1
-            if j >= 0 and pos < ends[j] and doc_ids[j] != did:
-                out.append((did, doc_ids[j]))
-                break
-    return sorted(set(out))

@@ -1248,7 +1248,7 @@ def _doc_signatures(spark, sf_dir):
     # for the Arrow stage (CPU-bound per row) but wrong as a cache layout —
     # every warm scan of a 32-partition cache of tiny partitions pays ~30
     # extra task launches per stage, and the edges DAG scans this cache
-    # ~10x per build (measured at 10x scale: warm anchor_candidates 1.19 s
+    # ~10x per build (measured at 10x scale: warm anchor candidates 1.19 s
     # with a 32-partition cache vs 0.56 s with a size-derived one). AQE
     # cannot do this itself: cached plans pin their output partitioning.
     cols = ["doc_id", "sha256", "n_chars", "n_shingles", "bands", "anchors"]
@@ -1321,9 +1321,9 @@ SELECT ia AS doc_id_a, ib AS doc_id_b FROM metrics WHERE jac >= 0.8
 
 
 def q_substring_dup_pairs(spark, sf_dir):
-    """B8 (suffix pass): exact-substring containment pairs through the
-    engine path (anchor-sampled candidates -> tier-1 estimate -> C-level
-    smaller-in-larger verify). Oracle = brute-force position() over all
+    """B8 (substring pass): exact-substring containment pairs through the
+    engine path — build_edges' substring kind (anchor-sampled candidates ->
+    tier-1 estimate -> length gate -> C-level smaller-in-larger verify). Oracle = brute-force position() over all
     pairs UNDER THE ENGINE'S STATED PRECONDITIONS (suffix.py module doc):
     the contained doc has >= shingle_w tokens (a shorter doc's whole-
     sequence fallback shingle can never match the container's w-grams) and
@@ -1334,11 +1334,13 @@ def q_substring_dup_pairs(spark, sf_dir):
     >= 1 anchor, and that residual anchor class — odds (1-1/8)^m for m
     shingles — is documented in suffix.py, not silently absorbed by the
     oracle."""
-    from webcrawler_spark.operators.suffix import substring_edges
+    from webcrawler_spark.operators.lsh import build_edges
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return substring_edges(_doc_signatures(spark, sf_dir), docs).select(
-        F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b")
+    return (
+        build_edges(_doc_signatures(spark, sf_dir), DEFAULT_CONFIG, docs=docs)
+        .filter(F.col("kind") == "substring")
+        .select(F.col("a").alias("doc_id_a"), F.col("b").alias("doc_id_b"))
     )
 
 
