@@ -210,23 +210,42 @@ def test_multimodal_codec_mode_through_spark(spark):
 def test_substring_containment(spark, substring_verdicts):
     """The engine's one length gate + verify core: a true substring
     verifies with its container, a non-substring does not, and a pair with
-    an empty side is gated out before any text moves."""
+    an empty side is gated out before any text moves. Multi-byte texts
+    (accents, CJK, emoji) pin the byte search to Python's str-in-str
+    verdicts."""
     docs = spark.createDataFrame(
         [
             (1, "alpha beta gamma delta epsilon zeta"),
             (2, "beta gamma delta"),  # substring of 1
             (3, "gamma beta"),  # not a substring
             (4, ""),  # empty
+            (5, "café crème brûlée au lait"),
+            (6, "crème brûlée"),  # substring of 5
+            (7, "creme brulee"),  # not a substring of 5 (accents stripped)
+            (8, "東京都の天気は晴れです"),
+            (9, "天気は晴れ"),  # substring of 8
+            (10, "天気は雨"),  # not a substring of 8
+            (11, "go 🌍 world 🚀 launch"),
+            (12, "🌍 world 🚀"),  # substring of 11
+            (13, "🚀 world 🌍"),  # not a substring of 11
         ],
         "doc_id long, text string",
     )
+    pairs = [(1, 2), (1, 3), (1, 4), (5, 6), (5, 7), (9, 8), (8, 10),
+             (11, 12), (11, 13)]
     got = {
         (r["a"], r["b"]): (r["is_substring"], r["container"])
-        for r in substring_verdicts([(1, 2), (1, 3), (1, 4)], docs)
+        for r in substring_verdicts(pairs, docs)
     }
     assert got[(1, 2)] == (True, 1)
     assert got[(1, 3)][0] is False
     assert (1, 4) not in got  # empty side gated out before any text moves
+    # multi-byte texts: the verdicts of Python's str-in-str
+    assert got[(5, 6)] == (True, 5)
+    assert got[(9, 8)] == (True, 8)  # the smaller text on the a side
+    assert got[(11, 12)] == (True, 11)
+    for pair in ((5, 7), (8, 10), (11, 13)):
+        assert got[pair] == (False, None), pair
 
 
 def test_substring_edges_on_corpus(spark):

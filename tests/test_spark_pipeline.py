@@ -1,6 +1,9 @@
 """Distributed engine vs sequential oracle: exact parity (SURVEY.md 5.2-3)
 plus extraction byte-identity on Spark and union-find correctness."""
 
+import re
+from contextlib import contextmanager
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -191,8 +194,9 @@ def test_extraction_single_execution_in_plan(spark, corpus_dir):
     assert plan.count("MapInPandas") == 1
 
 
-def test_connected_components_vs_dsu(spark):
-    """Pathological graphs: long chain, star, two blobs + bridge, random."""
+def _uf_graph_set():
+    """Pathological graphs in one edge list: long chain, star, two blobs +
+    bridge, random."""
     import random
 
     rnd = random.Random(7)
@@ -203,9 +207,11 @@ def test_connected_components_vs_dsu(spark):
     blob_b = [(rnd.randrange(3000, 3050), rnd.randrange(3000, 3050)) for _ in range(200)]
     edges += blob_a + blob_b + [(2049, 3000)]  # bridge merges the blobs
     edges += [(rnd.randrange(0, 5000), rnd.randrange(0, 5000)) for _ in range(300)]
-    edges = [(a, b) for a, b in edges if a != b]
+    return [(a, b) for a, b in edges if a != b]
 
-    # DSU ground truth
+
+def _dsu_truth(edges):
+    """Sequential DSU ground truth: node -> min member of its component."""
     parent = {}
 
     def find(x):
@@ -232,13 +238,95 @@ def test_connected_components_vs_dsu(spark):
         m = min(ids)
         for x in ids:
             want[x] = m
+    return want
 
+
+@contextmanager
+def _uncoalesced(spark):
+    """AQE partition coalescing off for the block: union-find's distinct
+    exchange keeps all shuffle partitions, so one component's edges spread
+    over several partitions."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _components(spark, edges):
     df = spark.createDataFrame(edges, "a long, b long")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in connected_components(df).collect()
+    return {r["doc_id"]: r["cluster_id"] for r in connected_components(df).collect()}
+
+
+def test_connected_components_vs_dsu(spark):
+    """Pathological graphs: long chain, star, two blobs + bridge, random."""
+    edges = _uf_graph_set()
+    assert _components(spark, edges) == _dsu_truth(edges)
+
+
+def test_connected_components_star_round_fallback(spark, monkeypatch):
+    """When a component's edges sit in several partitions, the local
+    contraction leaves one star per partition and the star rounds must
+    finish the job; an input that is already a min-rooted star forest stays
+    one and passes the first fixpoint test."""
+    from webcrawler_spark.operators import components as C
+
+    fixpoint_tests = []
+    real = C._is_min_rooted_star_forest
+
+    def counted(edges):
+        fixpoint_tests.append(1)
+        return real(edges)
+
+    monkeypatch.setattr(C, "_is_min_rooted_star_forest", counted)
+    cases = {
+        "graph set": _uf_graph_set(),
+        "star forest": [(v, 1000) for v in range(1001, 1050)]
+        + [(v, 7) for v in (8, 9, 40)],
+        "100-node chain": [(i, i + 1) for i in range(99)],
     }
-    assert got == want
+    n_tests = {}
+    with _uncoalesced(spark):
+        for name, edges in cases.items():
+            fixpoint_tests.clear()
+            assert _components(spark, edges) == _dsu_truth(edges), name
+            n_tests[name] = len(fixpoint_tests)
+    assert n_tests["star forest"] == 1
+    assert n_tests["graph set"] > 1 and n_tests["100-node chain"] > 1
+
+
+_PYTHON_NODES = re.compile(r"MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython")
+
+
+def _python_nodes(df):
+    """Python nodes of df's physical plan, read before it runs (an executed
+    adaptive plan prints its initial and final plans both)."""
+    return _PYTHON_NODES.findall(df._jdf.queryExecution().executedPlan().toString())
+
+
+def test_python_stages_in_edges_and_union_find(spark, sigs, docs_df, monkeypatch):
+    """build_edges with the substring pass runs no Python stage, and
+    connected_components adds exactly one, the local contraction. Signatures
+    come from a local relation so their own Arrow stage is not in the plan;
+    every plan union-find checkpoints is inspected, star rounds included."""
+    local_sigs = spark.createDataFrame(sigs.collect(), sigs.schema)
+    edges = build_edges(local_sigs, CFG, docs=docs_df)
+    assert _python_nodes(edges) == []
+
+    per_frame = []
+    real = type(edges).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        per_frame.append(len(_python_nodes(self)))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", capture)
+    with _uncoalesced(spark):
+        connected_components(edges).collect()
+    assert len(per_frame) > 1  # a star round ran
+    assert per_frame[0] == 1 and sum(per_frame) == 1, per_frame
 
 
 def test_pipeline_end_to_end_and_resume(spark, corpus_dir, corpus, tmp_path):

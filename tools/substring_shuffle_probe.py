@@ -113,7 +113,7 @@ def main() -> None:
     n_cand = cand.count()
     cand_delta = _shuffle_delta(spark, before)
 
-    # the watched sub-DAG: length gate + per-pair text joins + Arrow verify
+    # the watched sub-DAG: length gate + per-pair text joins + byte search
     before = _stages(spark)
     verdicts = verify_substring_pairs(_length_gate(cand), docs).persist()
     edges = verdicts.filter("is_substring")
@@ -143,7 +143,7 @@ def main() -> None:
         ),
         "note": (
             "verify_subdag isolates the length gate + per-pair text joins "
-            "+ Arrow check; the container text replicates once per "
+            "+ byte search; the container text replicates once per "
             "surviving pair, bounded by 64 KiB/doc (textnorm cap) x "
             "true-positive pair count"
         ),

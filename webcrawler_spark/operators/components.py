@@ -1,16 +1,31 @@
-"""Distributed connected components: alternating large-star / small-star
-(SURVEY.md B10; Kiveris et al., "Connected Components in MapReduce and
-Beyond", SoCC'14 — see PAPERS.md). Pure DataFrame — no GraphFrames.
+"""Distributed connected components: a per-partition DSU contraction, then
+alternating large-star / small-star rounds only while the contracted graph
+is not yet a min-rooted star forest (SURVEY.md B10). Pure DataFrame plus
+one Arrow map stage — no GraphFrames.
 
-Converges in O(log^2 n) rounds (O(log n) in practice); every round is one
-groupBy-min window + a projection. Each iteration localCheckpoints to cut
-lineage (the reference's periodic-persistence analog, SURVEY.md section 4).
+1. ``_local_contract`` runs a vectorized NumPy union-find over each
+   partition's edges and replaces them by a min-rooted star forest with the
+   same connectivity — the per-partition local phase of *BTS: Load-Balanced
+   Distributed Union-Find* (ICDE'24, PAPERS.md). When one partition holds
+   every edge of each component (AQE coalesces the small post-``distinct``
+   exchange of a dedup graph to one partition), the result is already the
+   fixpoint and no star round runs.
+2. Otherwise the star rounds of Kiveris et al., "Connected Components in
+   MapReduce and Beyond" (SoCC'14, PAPERS.md) finish the job on the
+   contracted graph: O(log^2 n) rounds (O(log n) in practice), each one
+   groupBy-min window + a projection, each localCheckpointed to cut lineage
+   (the reference's periodic-persistence analog, SURVEY.md section 4).
 
 Node ids are int64; the final assignment maps every node to the minimum
 doc_id of its component (the oracle's min-root convention).
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -90,59 +105,107 @@ def _is_min_rooted_star_forest(edges: DataFrame) -> bool:
     )
 
 
+def _min_labels(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find over the edge arrays (u, v) -> (nodes, lab): the sorted
+    distinct node ids and, per node index, the index of its component's
+    minimum. Ids are densified with np.unique, so index order is id order.
+    Each round hooks the larger root of every edge whose endpoints still
+    have different roots under the smallest root it touches, then pointer
+    jumps until every node points at a root. Labels only decrease and
+    always name a node of the same component, so the one root left per
+    component is its minimum. Edges whose endpoints share a root stay
+    resolved and are dropped from later rounds."""
+    nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    eu, ev = inv[: len(u)], inv[len(u) :]
+    lab = np.arange(len(nodes))
+    while True:
+        lu, lv = lab[eu], lab[ev]
+        live = lu != lv
+        if not live.any():
+            return nodes, lab
+        eu, ev, lu, lv = eu[live], ev[live], lu[live], lv[live]
+        np.minimum.at(lab, np.maximum(lu, lv), np.minimum(lu, lv))
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def _contract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """One partition's (u, v) edges -> (node, min node of its local
+    component) for every non-root node."""
+    parts = [
+        (b.column("u").to_numpy(zero_copy_only=False),
+         b.column("v").to_numpy(zero_copy_only=False))
+        for b in batches
+    ]
+    if not parts:
+        return
+    nodes, lab = _min_labels(
+        np.concatenate([p[0] for p in parts]), np.concatenate([p[1] for p in parts])
+    )
+    leaf = lab != np.arange(len(nodes))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(nodes[leaf]), pa.array(nodes[lab[leaf]])], names=["u", "v"]
+    )
+
+
+def _local_contract(edges: DataFrame) -> DataFrame:
+    """(u, v) -> a min-rooted star forest per partition with the input's
+    connectivity. Edges of one component that sit in different partitions
+    leave one star per partition; the star rounds merge those."""
+    return edges.mapInArrow(_contract_batches, "u long, v long")
+
+
+def _star_fixpoint(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
+    """edges(a, b) -> the fixpoint (u, v): one (node, component-min) edge
+    per non-root node; roots, each its component's minimum, appear only as
+    v.
+
+    The input is deduplicated, contracted per partition
+    (``_local_contract``), then alternates large-star/small-star until the
+    edge set IS the fixpoint shape — a min-rooted star forest, tested
+    directly on the current edge set. The alternating algorithm's fixpoints
+    are exactly the min-rooted star forests (Kiveris et al. §3), star
+    forests are invariant under both passes, and
+    `_is_min_rooted_star_forest` is a sound+complete test of that shape (see
+    its docstring). A contraction that saw whole components is already that
+    shape, so the first test passes and no round runs.
+
+    Each step uses a LAZY localCheckpoint — the plan is truncated
+    immediately (both star passes reference their input twice, so without
+    truncation the lineage grows ~4x per round and analysis itself OOMs on
+    deep inputs), but materialization is deferred to the convergence-test
+    aggregation — ONE Spark job per round. Batching two star rounds per
+    barrier was MEASURED SLOWER (real graphs converge in 1-3 rounds)."""
+    cur = _local_contract(
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    ).localCheckpoint(eager=False)
+    for _ in range(max_iterations):
+        # the test job materializes the checkpoint as a side effect
+        if _is_min_rooted_star_forest(cur):
+            return cur
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+    raise RuntimeError(f"connected_components: no fixpoint in {max_iterations} iterations")
+
+
 def connected_components(
     edges: DataFrame, max_iterations: int = 50
 ) -> DataFrame:
     """edges(a, b) -> assignments(doc_id, cluster_id) for every node that
     appears in an edge (isolated nodes are absent — callers coalesce).
 
-    Alternates large-star/small-star until the edge set IS the fixpoint
-    shape — a min-rooted star forest, tested directly on the current edge
-    set (round 6). The previous stop ran rounds until two consecutive edge
-    fingerprints matched, which by construction costs one full EXTRA star
-    round (2 window sorts + a distinct exchange) just to confirm the
-    fixpoint; the direct test replaces the fingerprint job one-for-one
-    (same checkpoint-materializing aggregation slot, no extra job) and
-    stops at the SAME state: the alternating algorithm's fixpoints are
-    exactly the min-rooted star forests (Kiveris et al. §3), star forests
-    are invariant under both passes, and `_is_min_rooted_star_forest` is a
-    sound+complete test of that shape (see its docstring).
-
-    Round-6 barrier optimization (guide §1.2): each round uses a LAZY
-    localCheckpoint — the plan is truncated immediately (both star passes
-    reference their input twice, so without truncation the lineage grows
-    ~4x per round and analysis itself OOMs on deep inputs), but
-    materialization is deferred to the convergence-test aggregation — ONE
-    Spark job per round instead of eager-checkpoint-job + test-job. The
-    round structure is unchanged (batching two star rounds per barrier was
-    tried earlier and MEASURED SLOWER — real graphs converge in 1-3
-    effective rounds)."""
-    cur = (
-        edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(max_iterations):
-        # the test job materializes the checkpoint as a side effect
-        if _is_min_rooted_star_forest(cur):
-            break
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
-    else:
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iterations} iterations")
-
-    # At the fixpoint every edge is (node, component-min). A node can also be
-    # a root (appears only as v): roots map to themselves.
-    #
-    # No distinct over the union (round 6): the fixpoint is a min-rooted
-    # star forest (Kiveris et al. §3 — the property the min-root assignment
-    # below already relies on), so (a) each non-root node appears exactly
-    # once as u (its single (u, component-min) edge; the edge multiset is
-    # distinct and v is determined by u), (b) roots never appear as u (a
-    # root's star edge would be the self-loop (min, min), filtered every
-    # round), and (c) `roots` is deduped by its own distinct. The branches
-    # are therefore disjoint and internally duplicate-free — the old
-    # distinct was one full exchange of the assignment stream for nothing.
+    Contracts each partition with a local DSU, then runs star rounds only
+    while the contracted graph is not yet a min-rooted star forest
+    (``_star_fixpoint``). At the fixpoint every member edge is (node,
+    component-min) and roots map to themselves. No distinct over the union:
+    each non-root node appears exactly once as u, roots never appear as u
+    (a root's star edge would be the self-loop (min, min)), and ``roots``
+    is deduped by its own distinct."""
+    cur = _star_fixpoint(edges, max_iterations)
     members = cur.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = cur.select(F.col("v").alias("doc_id")).distinct().withColumn(
         "cluster_id", F.col("doc_id")
@@ -152,10 +215,14 @@ def connected_components(
 
 def assign_clusters(docs: DataFrame, edges: DataFrame) -> DataFrame:
     """B11: every doc_id -> cluster_id (min id in component; singletons map
-    to themselves)."""
-    comp = connected_components(edges)
+    to themselves). Joins against the fixpoint's member edges only: a root
+    is absent from them, and as its component's minimum it maps to itself,
+    which the coalesce already gives — no roots exchange, no union."""
+    members = _star_fixpoint(edges).select(
+        F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
+    )
     return (
         docs.select("doc_id")
-        .join(comp, "doc_id", "left")
+        .join(members, "doc_id", "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", "doc_id"))
     )

@@ -1,7 +1,7 @@
 """Candidate generation + verification (SURVEY.md B4/B5/B6/B7/B8).
 
-One candidate path, all relational, all JVM-side (whole-stage codegen; zero
-Python outside the substring verify):
+One candidate path, all relational, all JVM-side (whole-stage codegen; no
+Python stage, the substring verify included):
 
 - ``bucket_rows``: (gen, key, doc_id) rows from exploded band hashes,
   anchor shingles and (cfg.simhash_edges) simhash block keys, unioned
@@ -16,8 +16,8 @@ Python outside the substring verify):
 - ``_verified_edges``: the one verify tail — anchor tier-1 estimate, exact
   Jaccard/containment via size(array_intersect(...)) over LSH ∪ tier-1
   pairs (bit-for-bit with the oracle), SimHash bit_count(a ^ b) <= hamming,
-  and the substring length gate (``_length_gate``) + text verify
-  (suffix.verify_substring_pairs).
+  and the substring length gate (``_length_gate``) + JVM byte-search text
+  verify (suffix.verify_substring_pairs).
 
 ``build_edges`` (batch) and ``incremental.incremental_edges`` (new batch
 against persisted state) differ only in how they derive candidates,
@@ -347,9 +347,9 @@ def build_edges(
 
     Candidates come from ONE bucket exchange (``unified_capped_buckets``);
     everything after the candidate pairs is ``_verified_edges``. The
-    substring pass (B8) verifies smaller-text-in-larger-text with a C-level
-    search via PER-PAIR text joins: a doc in k surviving pairs has its text
-    co-located k times. That trade is deliberate and measured
+    substring pass (B8) verifies smaller-text-in-larger-text with a JVM
+    byte search (``Column.contains``) via PER-PAIR text joins: a doc in k
+    surviving pairs has its text co-located k times. That trade is deliberate and measured
     (tools/substring_shuffle_probe.py -> BENCH/substring_shuffle.json): the
     worst hub shape the anchor cap does not prune — one 64 KiB container
     holding ~300 standalone docs — shuffles ~6 MB compressed for the whole

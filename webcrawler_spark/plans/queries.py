@@ -565,9 +565,9 @@ def _shingle_df(spark, sf_dir):
 
 def _shingle_arrays(spark, sf_dir):
     """(doc_id, hs: array<long>) — the distinct hashed 5-gram set per doc,
-    CACHED: the ngram query consumes it twice (the exploded key stream and
-    the per-doc size projection), and without the cache each consumer
-    re-pays tokenize + 200 hashes per doc. Cache partitioning stays at
+    CACHED: the ngram query has three consumers (the exploded key stream,
+    the per-doc size projection and the shared-key prefilter), and without
+    the cache each consumer re-pays tokenize + 200 hashes per doc. Cache partitioning stays at
     scan parallelism (unlike the signature cache, the heavy consumer here
     is the CPU-bound explode, which wants width, and there are only two
     warm scans). Same class of cached intermediate as _doc_signatures'
@@ -672,7 +672,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
         F.col("p.a").alias("doc_id_a"), F.col("p.b").alias("doc_id_b")
     ).agg(F.count("*").alias("inter"))
     # per-doc sizes from the same cached hash arrays the key stream
-    # explodes — one tokenize+hash pass per corpus, two consumers
+    # explodes — one tokenize+hash pass per corpus, three consumers
     sizes = _shingle_arrays(spark, sf_dir).select(
         "doc_id", F.size("hs").alias("n_sh")
     )
